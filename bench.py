@@ -69,7 +69,7 @@ import pyspark.sql.functions as F  # noqa: E402
 
 from tokforge.engine.config import EngineConfig  # noqa: E402
 from tokforge.engine.session import build_spark  # noqa: E402
-from tokforge.engine.transform import make_sign_udf, transform_requests  # noqa: E402
+from tokforge.engine.transform import make_sign_udf  # noqa: E402
 from tokforge.sources.requests import requests_df  # noqa: E402
 
 REPLICAS = int(os.environ.get("TOKFORGE_BENCH_REPLICAS", "96"))

@@ -10,6 +10,7 @@ import time
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.util import PythonEvalType
 
 from tests.conftest import SF_SMALL
 from tokforge.engine.config import EngineConfig
@@ -28,19 +29,29 @@ CFG = EngineConfig()
 
 
 def _finish(query, timeout=45):
-    """Timer-less availableNow queries terminate on their own; queries with
-    registered state timers keep scheduling timeout batches instead, so
-    after a grace period stop once the source is drained (an empty batch
-    completed after at least one data batch)."""
-    query.awaitTermination(timeout)
-    deadline = time.time() + 180
-    while time.time() < deadline and query.isActive:
+    """Wait for a stream to end, polling instead of idling.
+
+    Timer-less availableNow queries terminate on their own: return as soon
+    as they do.  Queries with registered state timers keep scheduling
+    no-data batches instead; stop those once drained (two no-data batches
+    completed after a data batch), and only between batches — right after
+    a batch completed, or while no trigger is active — so the stop never
+    lands between the sink's ledger marker and Spark's commit log (a
+    restart on the same checkpoint would then replay a batch the sink
+    already committed, and the replay's state stores would never commit).
+    Gives up and stops after ``timeout`` + 180 s."""
+    deadline = time.time() + timeout + 180
+    progress = query.recentProgress
+    last = progress[-1]["batchId"] if progress else None
+    while query.isActive and time.time() < deadline:
         progress = query.recentProgress
-        if any(p["numInputRows"] == 0 for p in progress) and any(
-            p["numInputRows"] > 0 for p in progress
-        ):
+        batch = progress[-1]["batchId"] if progress else None
+        rows = [p["numInputRows"] for p in progress]
+        drained = len(rows) >= 3 and rows[-1] == rows[-2] == 0 and any(rows)
+        if drained and (batch != last or not query.status["isTriggerActive"]):
             break
-        time.sleep(0.5)
+        last = batch
+        time.sleep(0.05)
     if query.isActive:
         query.stop()
     query.awaitTermination(60)
@@ -72,6 +83,13 @@ def test_cache_state_hit_miss_end_to_end(spark, tmp_path):
         spark, in_path, out_dir, ckpt, CFG, verify=True, available_now=True
     )
     _finish(query)
+    # the shipped (verify-on) stream verifies each row ONCE, through the
+    # Arrow UDF over the shared verifier
+    plan = query._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    evals = [ln for ln in plan.splitlines() if "EvalPython" in ln]
+    assert len(evals) == 1, plan
+    assert "verify_udf" in evals[0], plan
+    assert evals[0].rstrip().endswith(f", {PythonEvalType.SQL_SCALAR_ARROW_UDF}"), plan
 
     result = read_sink(spark, out_dir)
     per_key = (
@@ -91,7 +109,7 @@ def test_cache_state_hit_miss_end_to_end(spark, tmp_path):
 
 def test_cache_hits_match_batch_engine(spark, tmp_path):
     """Streaming MISS output must equal the batch engine (token equality)."""
-    from tokforge.engine.transform import transform_requests
+    from tokforge.engine.transform_arrow import transform_requests_arrow
 
     in_path, out_dir, ckpt = (
         str(tmp_path / "in"),
@@ -110,7 +128,7 @@ def test_cache_hits_match_batch_engine(spark, tmp_path):
     }
     batch_rows = {
         r["doc_id"]: list(r["tokens_out"])
-        for r in transform_requests(req, CFG, verify=False).collect()
+        for r in transform_requests_arrow(req, CFG, verify=False).collect()
     }
     assert stream_rows == batch_rows
 
@@ -869,11 +887,13 @@ def test_rejected_rows_dead_letter_sink(spark, tmp_path):
         str(tmp_path / "ckpt"),
         str(tmp_path / "rejected"),
     )
-    req = _signed_requests(spark, limit=10)
-    # corrupt half the signatures
+    req = _signed_requests(spark, limit=11)
+    # corrupt half the signatures; doc 10 carries no signature at all
+    d = F.col("doc_id").cast("long")
     req = req.withColumn(
         "sig",
-        F.when(F.col("doc_id").cast("long") % 2 == 0, F.concat("sig", F.lit("x")))
+        F.when(d == 10, F.lit(None).cast("string"))
+        .when(d % 2 == 0, F.concat("sig", F.lit("x")))
         .otherwise(F.col("sig")),
     )
     req.write.mode("append").parquet(f"{in_path}/drop=0")
@@ -891,8 +911,11 @@ def test_rejected_rows_dead_letter_sink(spark, tmp_path):
     acc_ids = {int(r["doc_id"]) for r in accepted.select("doc_id").collect()}
     rej_ids = {int(r["doc_id"]) for r in rejected.select("doc_id").collect()}
     assert all(d % 2 == 1 for d in acc_ids) and all(d % 2 == 0 for d in rej_ids)
-    assert len(acc_ids) + len(rej_ids) == 10
+    assert len(acc_ids) + len(rej_ids) == 11
     assert int(rejected.select("status").distinct().collect()[0][0]) == 403
+    # a null signature is rejected (403), not a crash of the stream
+    null_sig = rejected.filter(F.col("status") == 403).filter(F.col("doc_id") == "10")
+    assert null_sig.count() == 1
     # a status filter must prune partitions, not scan them
     plan = (
         rejected.filter(F.col("status") == 403)

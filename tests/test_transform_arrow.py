@@ -1,14 +1,18 @@
-"""Arrow-native transform path == pandas path, bit for bit, including
-signature verification, error channels, and empty/edge buckets."""
+"""The Arrow-native transform pass == the per-row kernel (``apply_plan``),
+row for row, including signature verification, error channels, and
+empty/edge buckets."""
 
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
 
 from tests.conftest import SF_SMALL
 from tokforge.engine.config import EngineConfig
-from tokforge.engine.transform import make_sign_udf, transform_requests
+from tokforge.engine.transform import make_sign_udf
 from tokforge.engine.transform_arrow import transform_requests_arrow
+from tokforge.operators.kernel import TransformError, apply_plan
+from tokforge.plans.options import OptionParseError, parse_chain
 from tokforge.sources.requests import requests_df
 
 CFG = EngineConfig()
@@ -20,7 +24,8 @@ CHAINS = [
     "crop:50:0:ce",  # default-format fallback per src_dtype
     "raw",
     "rotate:45/format:png",  # parse error channel
-    "expires:1704070800/format:png",  # expiry channel
+    "expires:1704070800/format:png",  # expiry channel (EPOCH+1h)
+    "expires:1704067230/format:png",  # EPOCH+30s: doc_id%7200 > 30 expire
     "max_bytes:40/format:jpeg/quality:95",
 ]
 
@@ -41,18 +46,57 @@ def _rows(df):
     }
 
 
-def test_arrow_equals_pandas_across_chains(spark):
+def _kernel_row(r, cfg: EngineConfig):
+    """One request through parse_chain, the expiry gate and the per-row
+    kernel, shaped like a row of :func:`_rows` (error rows carry the
+    exception text, null tokens and zeroed numeric columns)."""
+
+    def error(msg):
+        return (True, None, 0, None, 0, 0, None, msg)
+
+    try:
+        plan = parse_chain(r["ops"], cfg.presets_dict or None, cfg.only_presets)
+    except OptionParseError as exc:
+        return error(str(exc))
+    if plan.expires is not None and r["ts_unix"] > plan.expires:
+        return error("Request expired")
+    try:
+        out = apply_plan(
+            np.array(r["tokens"], dtype=np.int64),
+            plan,
+            orientation=r["orientation"],
+            src_dtype=r["src_dtype"],
+            default_format=cfg.default_format,
+        )
+    except (TransformError, OptionParseError) as exc:
+        return error(str(exc))
+    tokens = [int(t) for t in out.tokens]
+    return (True, tokens, len(tokens), out.dtype, out.size_bytes, out.quality, out.fmt, None)
+
+
+def _kernel_rows(req, cfg: EngineConfig = CFG):
+    cols = ["doc_id", "ops", "tokens", "orientation", "src_dtype"]
+    return {
+        r["doc_id"]: _kernel_row(r, cfg)
+        for r in req.select(*cols, F.unix_timestamp("ts").alias("ts_unix")).collect()
+    }
+
+
+def test_arrow_equals_kernel_across_chains(spark):
+    errors = set()
     for chain in CHAINS:
         req = requests_df(spark, SF_SMALL, chain).limit(60)
-        a = _rows(transform_requests(req, CFG, verify=False))
-        b = _rows(transform_requests_arrow(req, CFG, verify=False))
-        assert a == b, chain
+        expect = _kernel_rows(req)
+        assert len(expect) == 60, chain
+        assert _rows(transform_requests_arrow(req, CFG, verify=False)) == expect, chain
+        errors |= {v[-1] for v in expect.values()}
+    # the parse-error and expiry channels really fire
+    assert {"rotation must be one of: 0, 90, 180, 270", "Request expired"} <= errors
 
 
 def test_bearer_gate_parity(spark):
-    """The bearer-secret admission filter must act identically on BOTH
-    paths (round-1 advice: it was Arrow-only, silently processing
-    unauthorized rows through the pandas path)."""
+    """The bearer-secret admission filter drops unauthorized rows before
+    the Arrow pass; the admitted rows equal the per-row kernel."""
     cfg = EngineConfig(bearer_token="s3cret")
     chain = "crop:8:0/format:png"
     req = requests_df(spark, SF_SMALL, chain).limit(30)
@@ -62,9 +106,9 @@ def test_bearer_gate_parity(spark):
             F.lit("wrong")
         ),
     )
-    a = _rows(transform_requests(req, cfg, verify=False))
-    b = _rows(transform_requests_arrow(req, cfg, verify=False))
-    assert a == b
+    a = _rows(transform_requests_arrow(req, cfg, verify=False))
+    expect = _kernel_rows(req.filter(F.col("bearer") == "s3cret"), cfg)
+    assert a == expect
     assert a, "bearer filter must admit the matching half"
     assert all(int(d) % 2 == 0 for d in a), "only bearer-matching rows admitted"
 
@@ -86,15 +130,11 @@ def test_arrow_verify_in_pass(spark):
 
 
 def test_output_shaping_columns_both_paths(spark):
-    """content_disposition + meta_orientation (round-4 real effects) agree
-    between the pandas and Arrow paths and follow the reference rules:
-    filename -> header (sanitized), strip -> NULL metadata, auto_rotate
-    consumes the EXIF tag (1), auto_rotate:false / raw keep the original."""
-    from tokforge.engine.config import EngineConfig
-    from tokforge.engine.transform import transform_requests
-    from tokforge.engine.transform_arrow import transform_requests_arrow
-    from tokforge.sources.requests import requests_df
-
+    """content_disposition + meta_orientation (round-4 real effects) follow
+    the reference rules on the Arrow path, whose tokens equal the per-row
+    kernel: filename -> header (sanitized), strip -> NULL metadata,
+    auto_rotate consumes the EXIF tag (1), auto_rotate:false / raw keep
+    the original."""
     cases = {
         'filename:a"b/return_attachment:1/strip_metadata:true/format:jpeg': (
             'attachment; filename="a_b"',
@@ -107,37 +147,29 @@ def test_output_shaping_columns_both_paths(spark):
         "crop:10:0/format:png": (None, 1),
         "raw": (None, "orig"),
     }
-    cfg = EngineConfig()
     for chain, (cd, meta) in cases.items():
-        req = requests_df(spark, "/root/testdata/sf0.001", chain).limit(24)
-        for path_fn in (transform_requests, transform_requests_arrow):
-            rows = path_fn(req, cfg, verify=False).collect()
-            assert rows, chain
-            for r in rows:
-                assert r["content_disposition"] == cd, (chain, path_fn)
-                expect = 1 + int(r["doc_id"]) % 8 if meta == "orig" else meta
-                assert r["meta_orientation"] == expect, (chain, path_fn, r)
+        req = requests_df(spark, SF_SMALL, chain).limit(24)
+        out = transform_requests_arrow(req, CFG, verify=False)
+        assert _rows(out) == _kernel_rows(req), chain
+        rows = out.collect()
+        assert rows, chain
+        for r in rows:
+            assert r["content_disposition"] == cd, chain
+            expect = 1 + int(r["doc_id"]) % 8 if meta == "orig" else meta
+            assert r["meta_orientation"] == expect, (chain, r)
 
 
 def test_status_taxonomy_both_paths(spark):
     """The status column mirrors the reference's error classes
     (service.rs:676-800): 403 bad signature, 404 expired, 400 other
-    errors, 200 OK — identical in both execution paths and equal to the
-    scalar mapping."""
-    from tokforge.engine.config import EngineConfig
-    from tokforge.engine.transform import (
-        make_sign_udf,
-        status_for_error,
-        transform_requests,
-    )
-    from tokforge.engine.transform_arrow import transform_requests_arrow
-    from tokforge.sources.requests import requests_df
+    errors, 200 OK — the Arrow path's errors equal the per-row kernel's
+    and its status equals the scalar mapping."""
+    from tokforge.engine.transform import status_for_error
 
-    cfg = EngineConfig()
     # expires = EPOCH+10s: docs with doc_id%7200 > 10 expire (most of 30)
     chain = "expires:1704067210/crop:10:0/format:int32"
-    req = requests_df(spark, "/root/testdata/sf0.001", chain).limit(30)
-    sign = make_sign_udf(cfg)
+    req = requests_df(spark, SF_SMALL, chain).limit(30)
+    sign = make_sign_udf(CFG)
     d = F.col("doc_id").cast("long")
     req = req.withColumn(
         "sig",
@@ -145,11 +177,13 @@ def test_status_taxonomy_both_paths(spark):
             sign(F.col("ops"), F.col("doc_id"))
         ),
     )
-    for path_fn in (transform_requests, transform_requests_arrow):
-        rows = path_fn(req, cfg, verify=True).collect()
-        seen = set()
-        for r in rows:
-            expect = status_for_error(r["error"], r["sig_valid"])
-            assert r["status"] == expect, (path_fn, r)
-            seen.add(r["status"])
-        assert {200, 403, 404} <= seen
+    expect = _kernel_rows(req)
+    rows = transform_requests_arrow(req, CFG, verify=True).collect()
+    assert len(rows) == len(expect) == 30
+    seen = set()
+    for r in rows:
+        assert r["sig_valid"] == (int(r["doc_id"]) % 5 != 0), r
+        assert r["error"] == expect[r["doc_id"]][-1], r
+        assert r["status"] == status_for_error(r["error"], r["sig_valid"]), r
+        seen.add(r["status"])
+    assert {200, 403, 404} <= seen

@@ -14,6 +14,7 @@ import base64
 from typing import Callable
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -290,16 +291,21 @@ def q_path_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     iff BOTH the parser split the envelope exactly right AND the HMAC
     round-trips — the oracle checks the validity pattern, which pins
     more than echoing the signature string would."""
-    from tokforge.functions.signing import sign_path_series, validate_path_series
+    from tokforge.functions.signing import sign_path_series, verify_signatures
     from tokforge.plans.path import parse_path_col
 
     @F.pandas_udf("string")
     def sign_udf(path: pd.Series) -> pd.Series:
         return sign_path_series(CONFIG.key, CONFIG.salt, path)
 
-    @F.pandas_udf("boolean")
-    def verify_udf(sig: pd.Series, path: pd.Series) -> pd.Series:
-        return validate_path_series(CONFIG.key, CONFIG.salt, sig, path)
+    @F.arrow_udf("boolean")
+    def verify_udf(sig: pa.Array, path: pa.Array) -> pa.Array:
+        # Spark evaluates extracted python UDFs unconditionally, even
+        # inside a CASE branch — null (invalid-envelope) rows verify False
+        return verify_signatures(
+            CONFIG.key, CONFIG.salt, sig, path=path,
+            allow_unsigned=CONFIG.allow_unsigned,
+        )
 
     docs = load_documents(spark, sf_dir).select("doc_id", "source")
     d = F.col("doc_id").cast("long")
@@ -355,12 +361,10 @@ def q_path_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     paths = spark.read.parquet(_pathparse_fixture_dir(spark, sf_dir, built))
     parsed = paths.select("doc_id", parse_path_col(F.col("path")).alias("p"))
     p = F.col("p")
-    sig_ok = (
-        F.when(~p["valid"], F.lit(None).cast("boolean"))
-        # unsigned passes only when the deployment allows it — it doesn't
-        # here (service.rs:453-460, allow_unsigned=False)
-        .when(p["signature"] == "unsafe", F.lit(CONFIG.allow_unsigned))
-        .otherwise(verify_udf(p["signature"], p["path_to_sign"]))
+    # unsigned (`unsafe`) passes only when the deployment allows it — it
+    # doesn't here (service.rs:453-460, allow_unsigned=False)
+    sig_ok = F.when(~p["valid"], F.lit(None).cast("boolean")).otherwise(
+        verify_udf(p["signature"], p["path_to_sign"])
     )
     return parsed.select(
         "doc_id",

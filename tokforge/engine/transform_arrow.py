@@ -1,16 +1,16 @@
-"""Arrow-native execution of the transform chain via ``mapInArrow``.
-
-The pandas-UDF path converts every ``array<int>`` cell into a per-row
-numpy object (O(rows) Python allocations each way).  This path never
-materializes rows at all:
+"""The Spark execution of the transform chain: ONE ``mapInArrow`` pass
+applies verify -> parse -> validate -> kernel to whole record batches and
+never materializes per-row Python objects:
 
   pa.ListArray  ->  flat values + offsets  ->  bucket gather (one fancy
   index per (ops, n, dtype) bucket)  ->  rect kernel  ->  flat scatter
   ->  pa.ListArray.from_arrays
 
 Strings (ops, src_dtype) are dictionary-encoded so bucketing works on
-int codes.  Rows that error fall back to the (identical-semantics)
-pandas batch path — the fast path stays branch-free.
+int codes.  A bucket that fails a gate (parse error, MIME allowlist,
+expiry, security caps) or raises in the kernel gets its error text in
+the ``error`` column and a null ``tokens_out``; the other buckets of the
+batch are unaffected.
 """
 
 from __future__ import annotations
@@ -24,7 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tokforge.engine.config import DEFAULT_CONFIG, EngineConfig
-from tokforge.engine.transform import _plan_for
+from tokforge.engine.transform import _plan_for, admit_bearer, status_code_col
+from tokforge.functions.signing import verify_signatures
 from tokforge.operators.alloc import tune_allocator  # noqa: F401
 from tokforge.operators.kernel import TransformError
 from tokforge.operators.kernel_rect import apply_plan_rect
@@ -47,66 +48,6 @@ def _dict_codes(arr: pa.Array) -> tuple[np.ndarray, list]:
     if isinstance(enc, pa.ChunkedArray):
         enc = enc.combine_chunks()
     return enc.indices.to_numpy(zero_copy_only=False), enc.dictionary.to_pylist()
-
-
-def _string_views(arr: pa.Array) -> tuple[np.ndarray, memoryview]:
-    """(offsets, utf-8 data) views over a string column's raw Arrow
-    buffers — per-row byte access without materializing Python strings."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    bufs = arr.buffers()  # [validity, offsets, data]
-    odt = np.int64 if pa.types.is_large_string(arr.type) else np.int32
-    offsets = np.frombuffer(bufs[1], dtype=odt)[arr.offset : arr.offset + len(arr) + 1]
-    return offsets, memoryview(bufs[2])
-
-
-def _verify_batch(batch: pa.RecordBatch, config: EngineConfig) -> pa.Array:
-    """HMAC verification inside the same Arrow pass (a separate pandas-UDF
-    stage chained into mapInArrow measured 25x slower than either alone —
-    one Python crossing beats two).
-
-    The HMAC over ``salt || "/ops/"`` is precomputed once per distinct ops
-    chain (dictionary-encoded, so repeats are found in C) and ``copy()``-ed
-    per row — each row pays only the doc_id update + digest (reference
-    parity: url.rs:60-72 hashes salt+path; HMAC state after the shared
-    prefix is identical).  r8: sig/doc_id bytes come straight off the Arrow
-    buffers as memoryview slices and the comparison runs on the b64 BYTES —
-    the per-row ``to_pylist`` string materialization of all three columns
-    was ~3x the cost of the HMAC itself (guide §4.2: operate on the Arrow
-    buffers, not per-row Python objects).
-    """
-    import base64
-    import hashlib
-    import hmac
-
-    n = batch.num_rows
-    key, salt = config.key, config.salt
-    allow = config.allow_unsigned
-    ops_codes, ops_dict = _dict_codes(batch.column("ops"))
-    prefix_macs = [
-        hmac.new(key, salt + b"/" + o.encode() + b"/", hashlib.sha256)
-        for o in ops_dict
-    ]
-    doc_off, doc_mv = _string_views(batch.column("doc_id"))
-    sig_off, sig_mv = _string_views(batch.column("sig"))
-    # plain-int lists: per-row numpy scalar indexing costs ~0.4 us/row on
-    # top of a ~2.5 us/row HMAC floor
-    codes = ops_codes.tolist()
-    d_off = doc_off.tolist()
-    s_off = sig_off.tolist()
-    out = np.empty(n, dtype=bool)
-    unsafe = b"unsafe"
-    compare = hmac.compare_digest
-    b64 = base64.urlsafe_b64encode
-    for i in range(n):
-        s = sig_mv[s_off[i] : s_off[i + 1]]
-        if s == unsafe:
-            out[i] = allow
-            continue
-        mac = prefix_macs[codes[i]].copy()
-        mac.update(doc_mv[d_off[i] : d_off[i + 1]])
-        out[i] = compare(b64(mac.digest()).rstrip(b"="), s)
-    return pa.array(out)
 
 
 def _transform_record_batch(batch: pa.RecordBatch, config: EngineConfig) -> pa.RecordBatch:
@@ -230,7 +171,13 @@ def _transform_record_batch(batch: pa.RecordBatch, config: EngineConfig) -> pa.R
         )
 
     if "sig" in batch.schema.names:
-        sig_col = _verify_batch(batch, config)
+        # verified inside the same Arrow pass: a separate UDF stage chained
+        # into mapInArrow measured 25x slower — one Python crossing beats two
+        sig_col = verify_signatures(
+            config.key, config.salt, batch.column("sig"),
+            ops=batch.column("ops"), doc_id=batch.column("doc_id"),
+            allow_unsigned=config.allow_unsigned,
+        )
     else:
         sig_col = pa.array(np.ones(n, dtype=bool))
     return pa.RecordBatch.from_arrays(
@@ -276,10 +223,13 @@ def transform_requests_arrow(
     config: EngineConfig = DEFAULT_CONFIG,
     verify: bool = True,
 ) -> DataFrame:
-    """Arrow-native equivalent of ``transform_requests`` (same output
-    columns and values; tests assert parity)."""
-    from tokforge.engine.transform import admit_bearer
-
+    """The full per-row pipeline over a request DataFrame, in ONE
+    ``mapInArrow`` pass: signature gate -> parse/validate -> vectorized
+    kernel -> output columns.  Row-for-row equal to the per-row kernel
+    ``apply_plan`` (tests assert parity).  Everything before/after the
+    pass is built-in Column algebra, so Catalyst keeps scan pruning and
+    whole-stage codegen around the one Arrow exchange (SURVEY.md §3
+    entry point 1)."""
     df = admit_bearer(requests, config)
     df = df.withColumn("ts_unix", F.unix_timestamp(F.col("ts")))
     cols = [
@@ -308,10 +258,8 @@ def transform_requests_arrow(
                         batch.slice(s, _KERNEL_SLICE_ROWS), config
                     )
 
-    from tokforge.engine.transform import status_code_col
-
     # status class is derived JVM-side from (sig_valid, error) — zero cost
-    # inside the Arrow pass, identical to the pandas path
+    # inside the Arrow pass
     return df.mapInArrow(fn, OUTPUT_SCHEMA_DDL).withColumn(
         "status", status_code_col()
     )

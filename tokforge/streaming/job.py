@@ -57,17 +57,14 @@ def transform_stream(
     rejected_query = None
     rejected_sink = None
     if verify:
-        verify_udf = make_verify_udf(config)
-        stream = stream.withColumn(
-            "sig_valid", verify_udf(F.col("sig"), F.col("ops"), F.col("doc_id"))
-        )
+        sig_valid = make_verify_udf(config)(F.col("sig"), F.col("ops"), F.col("doc_id"))
         if rejected_dir is not None:
             # status class via the shared taxonomy (service.rs:676-800):
             # the dead-letter sink partitions on it, so per-class replay /
             # alerting reads prune whole directories
             from tokforge.engine.transform import STATUS_FORBIDDEN
 
-            rejected = stream.filter(~F.col("sig_valid")).select(
+            rejected = stream.filter(~sig_valid).select(
                 "doc_id",
                 "source",
                 "ts",
@@ -91,7 +88,10 @@ def transform_stream(
                 # re-raises) instead of being silently dropped, and callers
                 # never race its commits.
                 rejected_query.awaitTermination()
-        stream = stream.filter(F.col("sig_valid"))
+        # filter on the UDF itself, not on a column holding it: Catalyst
+        # pushes such a filter below the watermark as a SECOND evaluation
+        # of the verifier (two ArrowEvalPython nodes, two HMACs per row)
+        stream = stream.filter(sig_valid)
     cached = with_cache_state(stream, config, ttl_ms)
     cached = observe_requests(cached)
     sink = IdempotentParquetSink(out_dir, partition_cols=partition_cols)

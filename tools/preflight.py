@@ -15,6 +15,9 @@ Checks:
    in the audited-bounded allowlist below (round-7 verdict: an
    unbounded `orderBy().collect()` in a gated path is a scale-killer;
    new sites must be audited for a cap and added here)
+5. single-verifier audit — `hmac.new(` and `compare_digest(` appear in
+   tokforge/ only in functions/signing.py, so a second signature
+   verifier fails here instead of drifting from the first
 Full value-equality lives in tools/check_correctness.py (~8 min).
 """
 
@@ -75,6 +78,28 @@ def audit_collect_sites() -> list[str]:
     return problems
 
 
+# the only tokforge/ module allowed to compute or compare an HMAC
+HMAC_HOME = "functions/signing.py"
+
+
+def audit_hmac_sites() -> list[str]:
+    import re
+
+    root = Path(__file__).resolve().parent.parent / "tokforge"
+    problems: list[str] = []
+    for p in sorted(root.rglob("*.py")):
+        rel = str(p.relative_to(root))
+        if rel == HMAC_HOME:
+            continue
+        n = len(re.findall(r"hmac\.new\(|compare_digest\(", p.read_text()))
+        if n:
+            problems.append(
+                f"verifier audit: {rel} has {n} hmac.new(/compare_digest( "
+                f"site(s) — signatures are computed and checked only in {HMAC_HOME}"
+            )
+    return problems
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     failures: list[str] = []
@@ -94,6 +119,7 @@ def main() -> int:
         failures.append(f"oracles without a query: {sorted(extra)}")
 
     failures.extend(audit_collect_sites())
+    failures.extend(audit_hmac_sites())
 
     import duckdb
 
