@@ -68,11 +68,12 @@ def kill_stray_spark_jvms() -> list[int]:
 import pyspark.sql.functions as F  # noqa: E402
 
 from tokforge.engine.config import EngineConfig  # noqa: E402
-from tokforge.engine.session import build_spark  # noqa: E402
+from tokforge.engine.session import build_spark, default_cpus  # noqa: E402
 from tokforge.engine.transform import make_sign_udf  # noqa: E402
 from tokforge.sources.requests import requests_df  # noqa: E402
 
 REPLICAS = int(os.environ.get("TOKFORGE_BENCH_REPLICAS", "96"))
+RUNS_DIR = Path(__file__).resolve().parent / "bench_runs"
 
 FLAGSHIP_CHAIN = (
     "resize:fill:128:0:1:1/gravity:ce/padding:4/rotate:90/brightness:25/"
@@ -242,7 +243,7 @@ def sustained_worker(in_small: str, in_vol: str) -> dict:
     from tokforge.engine.session import build_spark
     from tokforge.streaming.job import read_sink, transform_stream
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     spark = build_spark(
         app_name="tokforge-bench-sustained",
         master=f"local[{cpus}]",
@@ -294,6 +295,29 @@ def sustained_worker(in_small: str, in_vol: str) -> dict:
     }
 
 
+def launch_error(returncode: int, stderr: str) -> dict:
+    """Root cause of a failed sustained launch: the first JVM ``Caused by:``
+    line and the head of the Python traceback.  The stderr TAIL is useless
+    here — a failed streaming query prints its logical plan last."""
+    lines = (stderr or "").splitlines()
+    caused = next(
+        (ln.strip()[:500] for ln in lines if ln.lstrip().startswith("Caused by:")),
+        None,
+    )
+    tb = next(
+        (i for i, ln in enumerate(lines) if ln.startswith("Traceback (most recent")),
+        len(lines),
+    )
+    # header, the indented frames, then the exception line itself (a Py4J
+    # exception's message continues with the JVM stack: cut there)
+    head: list[str] = []
+    for ln in lines[tb : tb + 40]:
+        head.append(ln[:300])
+        if len(head) > 1 and not ln.startswith(" "):
+            break
+    return {"returncode": returncode, "caused_by": caused, "traceback": head}
+
+
 def bench_stream_sustained(in_small: str, in_vol: str):
     """The BASELINE metric at volume, made robust against the sandbox's
     PROCESS-LIFETIME bimodal slow mode (BENCH.md method notes; it gripped
@@ -309,7 +333,10 @@ def bench_stream_sustained(in_small: str, in_vol: str):
     a launch whose best volume pass runs > 1.5x the session's fastest
     is the documented process-lifetime slow mode, so it is flagged
     ``slow_mode`` and excluded from the best-of selection (every launch,
-    flagged or not, stays in the retained JSON for audit)."""
+    flagged or not, stays in the retained JSON for audit).
+
+    Returns ``(best, launches)``; ``best`` is None when every launch
+    failed, so the caller still reports the queries it already timed."""
     launches = int(os.environ.get("TOKFORGE_SUSTAINED_LAUNCHES", "5"))
     # wall budget so the 5-launch default cannot blow a caller's timeout:
     # at least 3 launches always run; past the budget no NEW launch starts
@@ -333,29 +360,60 @@ def bench_stream_sustained(in_small: str, in_vol: str):
         )
         if out.returncode != 0:
             results.append(
-                {"launch": li, "error": (out.stderr or "")[-2000:]}
+                {"launch": li, "error": launch_error(out.returncode, out.stderr)}
             )
             continue
         res = json.loads(out.stdout.strip().splitlines()[-1])
         res["launch"] = li
         results.append(res)
     ok = [r for r in results if "error" not in r]
-    if not ok:
-        raise RuntimeError(f"every sustained launch failed: {results}")
-    fastest = min(r["seconds"] for r in ok)
-    for r in ok:
-        r["slow_mode"] = r["seconds"] > 1.5 * fastest
-    kept = [r for r in ok if not r["slow_mode"]]
-    best = max(kept, key=lambda r: r["tokens_per_sec"])
-    runs_dir = Path(__file__).resolve().parent / "bench_runs"
+    best = None
+    if ok:
+        fastest = min(r["seconds"] for r in ok)
+        for r in ok:
+            r["slow_mode"] = r["seconds"] > 1.5 * fastest
+        kept = [r for r in ok if not r["slow_mode"]]
+        best = max(kept, key=lambda r: r["tokens_per_sec"])
     try:
-        runs_dir.mkdir(exist_ok=True)
-        (runs_dir / "sustained_latest.json").write_text(
+        RUNS_DIR.mkdir(exist_ok=True)
+        (RUNS_DIR / "sustained_latest.json").write_text(
             json.dumps({"launches": results, "best": best}, indent=1)
         )
     except OSError:
         pass
     return best, results
+
+
+def sustained_fields(best, launches: list[dict]) -> dict:
+    """The headline JSON line's sustained_volume_* fields.  When no launch
+    succeeded they are null and ``sustained_error`` carries the first
+    failed launch's root cause."""
+    if best is None:
+        fields = {
+            "sustained_volume_rows": None,
+            "sustained_volume_rows_per_sec": None,
+            "sustained_volume_tokens_per_sec": None,
+            "sustained_error": {
+                "failed_launches": len(launches),
+                "first": launches[0]["error"] if launches else None,
+            },
+        }
+    else:
+        dt = best["seconds"]
+        fields = {
+            "sustained_volume_rows": best["rows"],
+            "sustained_volume_rows_per_sec": int(best["rows"] / dt),
+            "sustained_volume_tokens_per_sec": int(best["tokens_out"] / dt),
+        }
+    # per-launch audit trail (also bench_runs/sustained_latest.json);
+    # negative = slow-mode launch, excluded from the best-of pick
+    fields["sustained_volume_launches"] = [
+        (-r["tokens_per_sec"] if r.get("slow_mode") else r["tokens_per_sec"])
+        if "error" not in r
+        else "launch-failed"
+        for r in launches
+    ]
+    return fields
 
 
 def main() -> None:
@@ -365,7 +423,7 @@ def main() -> None:
 
     kill_stray_spark_jvms()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     spark = build_spark(app_name="tokforge-bench", master=f"local[{cpus}]",
                         shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
@@ -392,9 +450,6 @@ def main() -> None:
     in_small, in_vol = materialize_stream_inputs(spark, sf_dir)
     spark.stop()
     vol_best, vol_launches = bench_stream_sustained(in_small, in_vol)
-    dt_vol = vol_best["seconds"]
-    vol_rows = vol_best["rows"]
-    vol_tokens = vol_best["tokens_out"]
 
     total = round(sum(queries.values()), 3)
     print(
@@ -411,17 +466,7 @@ def main() -> None:
                 "tokens_per_sec_simple": int(tokens_simple / dt_simple),
                 "stream_rows": stream_rows,
                 "stream_tokens_per_sec_sustained": int(stream_tokens / dt_stream),
-                "sustained_volume_rows": vol_rows,
-                "sustained_volume_rows_per_sec": int(vol_rows / dt_vol),
-                "sustained_volume_tokens_per_sec": int(vol_tokens / dt_vol),
-                # per-launch audit trail (also bench_runs/sustained_latest.json);
-                # negative = slow-mode launch, excluded from the best-of pick
-                "sustained_volume_launches": [
-                    (-r["tokens_per_sec"] if r.get("slow_mode") else r["tokens_per_sec"])
-                    if "error" not in r
-                    else "launch-failed"
-                    for r in vol_launches
-                ],
+                **sustained_fields(vol_best, vol_launches),
             }
         )
     )

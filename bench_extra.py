@@ -28,7 +28,7 @@ import pyspark.sql.functions as F  # noqa: E402
 
 import bench  # noqa: E402  (the frozen harness; we reuse its per-query fns)
 from tokforge.engine.config import EngineConfig  # noqa: E402
-from tokforge.engine.session import build_spark  # noqa: E402
+from tokforge.engine.session import build_spark, default_cpus  # noqa: E402
 from tokforge.sources.requests import requests_df  # noqa: E402
 
 
@@ -47,7 +47,7 @@ def dump_plan(name: str, df) -> None:
 def main() -> None:
     bench.kill_stray_spark_jvms()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     which = sys.argv[1:] or [
         "flagship", "simple", "windows", "dedup", "knn", "stream_cache"
     ]

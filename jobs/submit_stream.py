@@ -40,6 +40,11 @@ def main() -> None:
         "analog, e.g. 'source'); read back with read_sink(partitioned=True)",
     )
     args = parser.parse_args()
+    if args.ttl_ms > 0 and not args.continuous:
+        # TTL timeouts keep firing no-data batches, so an availableNow
+        # query never reaches its end and awaitTermination never returns
+        parser.error("--ttl-ms > 0 needs --continuous (an availableNow "
+                     "run with state TTL never terminates)")
 
     from pyspark.sql import SparkSession
 

@@ -78,3 +78,17 @@ def test_apply_state_store_sets_and_clears_provider(spark):
 
     with _pytest.raises(ValueError):
         apply_state_store(spark, "foyer")
+
+
+def test_default_cpus_follows_env_then_affinity(monkeypatch):
+    """One local core default for build_spark and the bench tools: the
+    SPARK_GRAFT_CPUS override when set, else the cores this process may
+    run on (never a fixed 32)."""
+    import os
+
+    from tokforge.engine.session import default_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3

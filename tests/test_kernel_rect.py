@@ -46,3 +46,35 @@ def test_rect_empty_matrix():
     )
     assert out.tokens.shape == (3, 0)
     assert list(out.size_bytes) == [0, 0, 0]
+
+
+@pytest.mark.parametrize("window", [4, 10])
+def test_moving_mean_rejects_even_window(window):
+    """Both branches (shifted adds w<=8, cumsum w>8) are only defined for
+    odd windows; an even one is refused at entry, not half-computed."""
+    from tokforge.operators.kernel_rect import _moving_mean_rect
+
+    mat = np.arange(24, dtype=np.int32).reshape(2, 12)
+    with pytest.raises(ValueError, match="odd"):
+        _moving_mean_rect(mat, window)
+
+
+@pytest.mark.parametrize("window", range(3, 22, 2))
+@pytest.mark.parametrize("negative", [False, True])
+def test_moving_mean_rect_equals_rowwise(window, negative):
+    """Odd windows across both branches equal the per-row kernel, on
+    non-negative int32 rows (int32 accumulation) and on rows holding
+    negative values (int64 fallback), including rows shorter than the
+    window."""
+    from tokforge.operators.kernel import _moving_average_floor
+    from tokforge.operators.kernel_rect import _moving_mean_rect
+
+    rng = np.random.default_rng(window * 2 + negative)
+    lo = -50257 if negative else 0
+    for n in (1, window - 1, 40):
+        mat = rng.integers(lo, 50257, size=(8, n), dtype=np.int32)
+        got = _moving_mean_rect(mat, window)
+        for i in range(mat.shape[0]):
+            assert list(got[i]) == list(_moving_average_floor(mat[i], window)), (
+                window, n, i,
+            )

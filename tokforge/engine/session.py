@@ -1,9 +1,9 @@
 """SparkSession builder tuned for the token engine.
 
-Defaults target local[32] testing but every knob is the one you would set
-on a 1000-executor cluster: AQE on (runtime re-plan + skew-join splitting),
-Arrow for the pandas UDF exchange, UTC session time so event-time windows
-are replay-stable, shuffle partitions sized to cores.
+Defaults target local[default_cpus()] testing but every knob is the one
+you would set on a 1000-executor cluster: AQE on (runtime re-plan +
+skew-join splitting), Arrow for the pandas UDF exchange, UTC session time
+so event-time windows are replay-stable, shuffle partitions sized to cores.
 """
 
 from __future__ import annotations
@@ -40,6 +40,13 @@ def apply_state_store(spark: SparkSession, state_store: str) -> None:
         raise ValueError(f"unknown state_store tier: {state_store!r}")
 
 
+def default_cpus() -> int:
+    """Local core count: ``SPARK_GRAFT_CPUS`` if set, else the cores this
+    process may run on (its affinity mask, not the host's core count)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def build_spark(
     app_name: str = "tokforge",
     master: str | None = None,
@@ -51,7 +58,7 @@ def build_spark(
     # the Python worker daemon.
     os.environ.setdefault("MALLOC_MMAP_MAX_", "0")
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
 
