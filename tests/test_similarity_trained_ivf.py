@@ -52,6 +52,10 @@ SF_BIG = "/root/testdata/sf0.1"
 CLUSTERS = 10
 ALPHA = 0.3
 N_Q_CLUSTERED = 50
+# recall@10 of the float Lloyd trainer (unit centroids, float assignment)
+# on the sf0.01 query set, local[4]; the trainer was replaced by
+# train_ivf_exact and this figure is the bar the exact trainer keeps
+FLOAT_TRAINER_RECALL_SF_MEDIUM = 0.5
 
 
 def _clustered_corpus(spark, sf_dir: str):
@@ -190,3 +194,14 @@ def test_search_results_rank_shape(spark):
         sims = [r["cos_sim"] for r in rows]
         assert sims == sorted(sims, reverse=True)
         assert all(r["vec_id"] != q for r in rows)
+
+
+def test_exact_trainer_matches_float_trainer_quality(spark):
+    """The integer-sum Lloyd trainer (quantize once, keep per-cell int64
+    vector sums, assign by round(cos, 4) against the un-normalized sum)
+    must not cost recall vs the float trainer it replaced: quantization
+    2^-20 << the 1e-4 cosine rounding.  The float trainer's recall is the
+    recorded FLOAT_TRAINER_RECALL_SF_MEDIUM."""
+    truth = q_knn_bruteforce(spark, SF_MEDIUM).collect()
+    r_exact = _recall_of(q_ivf_search_trained_exact(spark, SF_MEDIUM).collect(), truth)
+    assert r_exact >= FLOAT_TRAINER_RECALL_SF_MEDIUM - 0.05, r_exact
